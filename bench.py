@@ -89,10 +89,10 @@ def pages_corpus(n_docs: int) -> str:
 
 
 def run_extract_bench(spark, n_docs: int, cascade: bool = True) -> dict:
-    """Time the full extraction DAG (parse → assemble → fields) over the
-    cached corpus; a small warmup first so JIT/Python-worker startup isn't
-    billed to the measured run. ``cascade=False`` skips the two cascade
-    variants (the 1M scale point measures the fixed path only)."""
+    """Time the fused extraction plan over the cached corpus; a small
+    warmup first so JIT/Python-worker startup isn't billed to the
+    measured run. ``cascade=False`` skips the cascade variant (the 1M
+    scale point measures the fixed path only)."""
     from webextract import pipeline
 
     path = pages_corpus(n_docs)
@@ -112,30 +112,15 @@ def run_extract_bench(spark, n_docs: int, cascade: bool = True) -> dict:
            "split_bytes": split}
     if not cascade:
         return out
-    # adaptive-cost variant (M12): cheap pass + ensemble retries only
-    # below the gate. Three presets: the r3 two-pass cascade (strict
-    # profile, full fields arms), the two-pass cheap_fields one (strict
-    # + patterns-only pass 1 — honest gate: every REQUIRED field must
-    # pattern-hit to accept), and the r4 IN-BATCH plan (same decision
-    # rule per document, escalation inside the fused map — no pass-1
-    # cache, no second scan, no joins). The in-batch row is the one
-    # expected to land AT OR UNDER the fixed-ensemble wall (verdict #5).
-    from webextract import cache
-    for key, fn in [
-        ("cascade_wall_sec",
-         lambda: pipeline.run_extract_cascade(pages)),
-        ("cascade_cheap_wall_sec",
-         lambda: pipeline.run_extract_cascade(pages, cheap_fields=True)),
-        ("cascade_in_batch_wall_sec",
-         lambda: pipeline.run_extract_cascade_in_batch(pages)),
-    ]:
-        best = float("inf")
-        for _ in range(max(1, repeats)):
-            t0 = time.monotonic()
-            fn().write.format("noop").mode("overwrite").save()
-            best = min(best, time.monotonic() - t0)
-            cache.release_all()
-        out[key] = round(best, 3)
+    # adaptive-cost variant (M12): cheap strict-profile pass, full
+    # ensemble only below the gate, per document inside the fused map
+    best = float("inf")
+    for _ in range(max(1, repeats)):
+        t0 = time.monotonic()
+        (pipeline.run_extract(pages, accept=0.7)
+         .write.format("noop").mode("overwrite").save())
+        best = min(best, time.monotonic() - t0)
+    out["cascade_in_batch_wall_sec"] = round(best, 3)
     return out
 
 
@@ -480,7 +465,7 @@ def main() -> None:
         return
 
     # --extract-only is the scaling-bench probe (scripts/scaling_bench):
-    # fixed path only — the cascade variants belong to the full bench
+    # fixed path only — the cascade variant belongs to the full bench
     extract = run_extract_bench(spark, args.docs, cascade=not args.extract_only)
     if args.extract_only:
         print(json.dumps({"cpus": args.cpus, **extract}))

@@ -989,6 +989,7 @@ def test_scrub_pii_java_matches_python_re(spark):
         "12345678901234567890",                # 20-digit run, no tail (r4)
         "a 1.2.3.4.5 b",                       # 5 octets, no '.5' tail (r4)
         "1234.5.6.7",                          # documented residual: '1<IP>'
+        "1.2.3.4567.8",                        # documented residual: '<IP>.8'
         "", " ", "@", ".",
     ]
     def scrub_py(t):

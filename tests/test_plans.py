@@ -45,12 +45,18 @@ def test_fused_path_zero_exchange(spark, pages_parquet):
     """The fused extraction plan must contain NO shuffle — extraction is
     row-local and runs directly on scan partitions; shuffling payload
     bytes is the single worst cost at 100 TB. (repartition=True is the
-    explicit opt-in used by the checkpointed runner.)"""
+    explicit opt-in used by the checkpointed runner.) The M12 cascade
+    (accept=0.7) escalates per document inside the same map, so its
+    plan is the fixed plan."""
     pages = spark.read.parquet(pages_parquet)
-    plan = _explain(pipeline.run_extract(pages), "simple")
-    assert plan.count("Exchange") == 0, plan
-    plan_r = _explain(pipeline.run_extract(pages, repartition=True), "simple")
-    assert plan_r.count("Exchange") == 1, plan_r
+    for accept in (None, 0.7):
+        plan = _explain(pipeline.run_extract(pages, accept=accept), "simple")
+        assert plan.count("Exchange") == 0, plan
+        assert plan.count("MapInPandas") == 1, plan
+        assert plan.count("FileScan") == 1, plan
+        plan_r = _explain(pipeline.run_extract(
+            pages, repartition=True, accept=accept), "simple")
+        assert plan_r.count("Exchange") == 1, plan_r
 
 
 def test_layout_by_url_range_partitions(spark, pages_parquet):
@@ -168,14 +174,6 @@ def test_dedup_clusters_plan_window_free(spark):
     assert "Window" not in plan, plan
     cache.release(out)
     cache.release(sig)
-
-
-def test_cascade_retry_join_is_left_semi(spark, pages_parquet):
-    """The cascade's pass-2 input must be a left-semi join on url (the
-    mechanism bounding pass-2 payload reads to the low-conf fraction)."""
-    pages = spark.read.parquet(pages_parquet).limit(32)
-    plan = _explain(pipeline.run_extract_cascade(pages), "extended")
-    assert "LeftSemi" in plan, plan
 
 
 def test_gopher_flags_zero_exchange(spark):

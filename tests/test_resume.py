@@ -55,21 +55,34 @@ def test_idempotent_rerun(spark, pages_parquet, tmp_path):
 
 
 def test_reprocess_from_parse_checkpoint(spark, pages_parquet, tmp_path):
-    """C4: staged run materializes the parse stage; reprocess derives a
-    new extracted table from the checkpoint WITHOUT re-reading payloads,
-    and (with an unchanged registry) reproduces the original exactly."""
+    """C4: reprocess re-runs the field registry over the committed
+    extracted table WITHOUT re-reading payloads, and (with an unchanged
+    registry) reproduces the original exactly — spans included."""
     pages = _pages(spark, pages_parquet)
-    out = str(tmp_path / "staged")
-    first = runner.run_job_staged(spark, pages, out)
-    want = _final(first)
+    out = str(tmp_path / "reprocess")
+    first = runner.run_job(spark, pages, out, commit_groups=2)
+    want = _final_with_spans(first)
     assert len(want) == N
 
     redone = runner.reprocess_fields(spark, out)
-    assert _final(redone) == want
+    assert _final_with_spans(redone) == want
 
     lin = Catalog(out).read(spark, runner.LINEAGE_TABLE)
     stages = {r["stage"] for r in lin.select("stage").distinct().collect()}
     assert stages == {"final", "reprocess"}
+    rep = lin.filter(F.col("stage") == "reprocess").agg(
+        F.sum("input_count").alias("n"), F.sum("bytes_in").alias("bytes"),
+        F.sum("ok_count").alias("ok"), F.sum("fail_count").alias("fail"),
+    ).collect()[0]
+    assert rep["n"] == N
+    assert rep["ok"] + rep["fail"] == N
+    assert rep["bytes"] == 0  # no payload read
+
+
+def _final_with_spans(df):
+    rows = df.select("url", "text", "status", "confidence", "spans").collect()
+    return sorted((r["url"], r["text"], r["status"], r["confidence"],
+                   [tuple(s) for s in r["spans"]]) for r in rows)
 
 
 def test_lineage_counters(spark, pages_parquet, tmp_path):
@@ -354,3 +367,21 @@ def test_runner_canonical_keys_kill_resume(spark, tmp_path):
     parts = {r["partition_id"]
              for r in lin.select("partition_id").distinct().collect()}
     assert parts == set(canon_b.values())
+
+
+def test_ride_along_bucket_range_checked_lazily(spark, pages_parquet):
+    """A caller-computed ``bucket`` that with_bucket keeps must lie in
+    [0, n_buckets): building the plan runs nothing, and the first action
+    over an out-of-range id fails instead of mislabelling lineage."""
+    import pytest
+
+    from webextract import pipeline
+
+    pages = spark.read.parquet(pages_parquet).limit(8)
+    ok = pipeline.run_extract(pages.withColumn("bucket", F.lit(7)),
+                              n_buckets=8).collect()
+    assert len(ok) == 8
+    stale = pipeline.run_extract(pages.withColumn("bucket", F.lit(8)),
+                                 n_buckets=8)  # lazy: no error yet
+    with pytest.raises(Exception, match=r"bucket 8 outside \[0, 8\)"):
+        stale.collect()

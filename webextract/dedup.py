@@ -194,7 +194,8 @@ def dedup_paragraphs(df: DataFrame, id_col: str = "doc_id",
         F.posexplode(combo).alias("_pos", "_para"),
     ).withColumn(
         "_pkey",
-        # 'S:'-prefixed keys are 34+ chars — disjoint from 32-char md5s
+        # disjoint from every md5 key by the 'S:' prefix alone: md5
+        # emits only lowercase hex, which never contains 'S' or ':'
         F.when(F.col("_pos") == 0,
                F.concat(F.lit("S:"), F.col(id_col).cast("string")))
         .otherwise(F.md5("_para")))

@@ -34,9 +34,12 @@ from pyspark.sql import DataFrame
 # leftmost-match + greedy semantics instead:
 # - ip: `{2,}` middle octets + unbounded final digit group swallow a
 #   5-octet string or a digit tail whole ("1.2.3.4.5" and "1.2.3.45678"
-#   are each ONE <IP>, never "<IP>.5"). Known residual (documented, not
-#   an IPv4 shape): a LEADING group longer than 3 digits matches from
-#   its last 3 digits ("1234.5.6.7" → "1<IP>").
+#   are each ONE <IP>, never "<IP>.5"). Known residuals (documented,
+#   neither is an IPv4 shape): a group longer than 3 digits anywhere
+#   but last splits the run. A LEADING one matches from its last 3
+#   digits ("1234.5.6.7" → "1<IP>"); an INTERIOR one ends the match
+#   there, the final group taking its digits ("1.2.3.4567.8" →
+#   "<IP>.8").
 # - phone: `{8,}` (9+ digits, single space/dot/dash separators) —
 #   a 20-digit run is one <PHONE>, no digit tail; a leftmost scan
 #   cannot start mid-run, and greed cannot stop mid-run.

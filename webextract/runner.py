@@ -11,6 +11,11 @@ run anti-joins the already-completed buckets
 exactly the resume mechanic the north_rule demands, at bucket
 granularity. Re-running a finished job is a no-op (idempotence).
 
+Each commit group is ONE fused extraction pass
+(pipeline.run_extract_full), fixed or cascade. C4 reprocessing
+(reprocess_fields) needs no parse checkpoint: it re-runs only the field
+registry over the committed ``extracted`` table, reading no payloads.
+
 Scan-amplification note (the round-1 judge's #9): the bucket predicate
 ``pmod(xxhash64(url), n) IN (...)`` cannot prune parquet row groups, so
 with G commit groups the naive loop reads the full payload bytes G times
@@ -21,7 +26,7 @@ with G commit groups the naive loop reads the full payload bytes G times
    prunes at the scan and amplification is zero. Preferred; nothing to do
    in the runner.
 2. **stage_input=True (raw input).** One full pass writes the pruned
-   (url, warc_ts, html, doc_type, bucket) columns partitioned by commit
+   (url, warc_ts, html, bucket) columns partitioned by commit
    group into the checkpoint dir; each group job then reads ONLY its
    partition directory. Total payload I/O = 1 read + 1 write + 1 read
    (~3×) instead of G reads, independent of G — and the staged copy is
@@ -42,7 +47,7 @@ import shutil
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from . import cache, pipeline
+from . import pipeline, udfs
 from .checkpoint import Catalog
 
 EXTRACTED_TABLE = "extracted"
@@ -85,8 +90,7 @@ def run_job(
     resume: bool = True,
     sorted_layout: bool = False,
     stage_input: bool = False,
-    cascade: bool = False,
-    accept: float = 0.7,
+    accept: float | None = None,
     cheap_fields: bool = False,
     canonical_keys: bool = False,
 ) -> DataFrame:
@@ -98,17 +102,11 @@ def run_job(
     ``stage_input`` materializes the pending input once, partitioned by
     commit group, so per-group jobs read 1/G of the payload bytes
     instead of re-scanning everything (see module docstring).
-    ``cascade=True`` extracts each commit group with the M12
-    confidence-gated cascade (pipeline.run_extract_cascade_full,
-    ``accept`` gate) — same resume/lineage mechanics, adaptive cost;
-    ``cascade='in_batch'`` uses the r4 in-batch plan
-    (pipeline.run_extract_cascade_in_batch_full: per-document
-    escalation inside the fused map — row-identical to the two-pass
-    mode for a matching ``cheap_fields``, no pass-1 cache or second
-    scan per group; the faster choice when pass 2 is this engine's own
-    ensemble rather than an external one). ``cheap_fields`` is
-    forwarded to BOTH cascade modes (pass 1 patterns-only when True),
-    so the two modes always agree row-for-row.
+    ``accept`` (a float) extracts each commit group with the M12
+    confidence-gated cascade (pipeline.run_extract_full(accept=...):
+    per-document escalation inside the fused map) — same resume/lineage
+    mechanics, adaptive cost; ``cheap_fields`` runs its cheap pass with
+    the patterns-only fields arm.
 
     ``canonical_keys=True`` keys the resume bucketing AND the sorted
     output layout on ``urls.canonical_url(url)`` instead of the raw
@@ -148,8 +146,7 @@ def run_job(
     if canonical_keys:
         from .urls import canonical_url
         key = canonical_url("url")
-    prepped = pipeline.with_bucket(pipeline.with_doc_type(pages), n_buckets,
-                                   key=key)
+    prepped = pipeline.with_bucket(pages, n_buckets, key=key)
     if done:
         done_df = spark.createDataFrame(
             [(b,) for b in sorted(done)], "bucket int"
@@ -161,7 +158,7 @@ def run_job(
         if stage_input and any(pending_groups):
             staged_dir = os.path.join(out_root, f"_staged_input_{run_id}")
             (
-                prepped.select("url", "warc_ts", "html", "doc_type", "bucket")
+                prepped.select("url", "warc_ts", "html", "bucket")
                 .withColumn(
                     "cgroup",
                     F.expr(f"CAST(bucket * {commit_groups} DIV {n_buckets} AS INT)"))
@@ -180,17 +177,9 @@ def run_job(
                 chunk = prepped.filter(F.col("cgroup") == g).drop("cgroup")
             else:
                 chunk = prepped.filter(F.col("bucket").isin(buckets))
-            if cascade == "in_batch":
-                extracted = pipeline.run_extract_cascade_in_batch_full(
-                    chunk, accept=accept, n_buckets=n_buckets,
-                    repartition=True, cheap_fields=cheap_fields)
-            elif cascade:
-                extracted = pipeline.run_extract_cascade_full(
-                    chunk, accept=accept, n_buckets=n_buckets,
-                    repartition=True, cheap_fields=cheap_fields)
-            else:
-                extracted = pipeline.run_extract_full(chunk, n_buckets,
-                                                      repartition=True)
+            extracted = pipeline.run_extract_full(
+                chunk, n_buckets, repartition=True, accept=accept,
+                cheap_fields=cheap_fields)
             # one pass per group: cache so extracted + lineage don't recompute
             extracted = extracted.persist()
             try:
@@ -203,7 +192,6 @@ def run_job(
                 )
             finally:
                 extracted.unpersist()
-                cache.release(extracted)  # cascade pass-1 cache, per group
             processed += 1
     finally:
         if staged_dir is not None:
@@ -218,40 +206,6 @@ def run_job(
     return out
 
 
-PARSED_TABLE = "ckpt_parsed"
-
-
-def run_job_staged(
-    spark: SparkSession,
-    pages: DataFrame,
-    out_root: str,
-    run_id: str | None = None,
-    n_buckets: int = pipeline.DEFAULT_BUCKETS,
-) -> DataFrame:
-    """Staged variant of run_job: materializes the parse stage (the
-    expensive payload-touching pass) to the checkpoint catalog, then
-    derives extracted from it. Enables C4-style reprocessing: a changed
-    field registry re-runs ONLY assemble+fields from ``ckpt_parsed``,
-    never re-reading/re-parsing payloads (reference analogue:
-    reprocess-with-cached-OCR, document_service.py:253-282)."""
-    run_id = run_id or pipeline.new_run_id()
-    catalog = Catalog(out_root)
-    parsed = pipeline.stage_parse(pages, n_buckets).persist()
-    try:
-        catalog.append(PARSED_TABLE, parsed)
-        extracted = pipeline.stage_fields(pipeline.stage_assemble(parsed)).persist()
-        try:
-            catalog.append(EXTRACTED_TABLE,
-                           extracted.select(*pipeline.EXTRACTED_COLUMNS))
-            catalog.append(LINEAGE_TABLE,
-                           pipeline.lineage_of(extracted, run_id, "final"))
-        finally:
-            extracted.unpersist()
-    finally:
-        parsed.unpersist()
-    return catalog.read(spark, EXTRACTED_TABLE)
-
-
 def reprocess_fields(
     spark: SparkSession,
     out_root: str,
@@ -259,15 +213,29 @@ def reprocess_fields(
     run_id: str | None = None,
     version: int | None = None,
 ) -> DataFrame:
-    """Re-run assemble+fields from the checkpointed parse output (pinned
-    to a catalog snapshot) — zero payload re-reads. Returns the new
-    extracted table; writes it + lineage under ``out_table``."""
+    """C4 reprocess-with-cached-extraction (reference analogue:
+    document_service.py:253-282): re-run the field registry
+    (fields.extract_spans) over the committed ``extracted`` table,
+    pinned to catalog snapshot ``version`` (latest when None), with
+    zero payload reads. That suffices because best-of selection never
+    reads the field registry (boiler/pdfrun import nothing from
+    fields): a changed registry changes spans and confidence, never
+    text. (A table written with the cascade, ``accept``, keeps the text
+    its gate picked; reprocessing does not revisit that pick.) Writes
+    the new table under ``out_table`` and ``reprocess``
+    lineage rows, bucketed by pipeline.with_bucket on url; their
+    ``bytes_in`` is 0 because no payload is read. Returns the new
+    table."""
     run_id = run_id or pipeline.new_run_id()
     catalog = Catalog(out_root)
-    parsed = catalog.read(spark, PARSED_TABLE, version=version)
-    if parsed is None:
-        raise ValueError(f"no {PARSED_TABLE} checkpoint under {out_root}")
-    extracted = pipeline.stage_fields(pipeline.stage_assemble(parsed)).persist()
+    committed = catalog.read(spark, EXTRACTED_TABLE, version=version)
+    if committed is None:
+        raise ValueError(f"no {EXTRACTED_TABLE} table under {out_root}")
+    inputs = pipeline.with_bucket(
+        committed.drop("spans", "confidence"), key=F.col("url")
+    ).withColumn("bytes_in", F.lit(0).cast("bigint"))
+    extracted = inputs.mapInPandas(
+        udfs.fields_batches, udfs.EXTRACTED_FIELDS_SCHEMA).persist()
     try:
         catalog.append(out_table, extracted.select(*pipeline.EXTRACTED_COLUMNS))
         catalog.append(LINEAGE_TABLE,

@@ -4,8 +4,11 @@ Each function here is a ``mapInPandas`` body: it receives an iterator of
 pandas batches for ONE physical partition and yields transformed batches.
 Per-row Python exists only *inside* a batch loop over documents (the cost
 model SURVEY.md §7.2 accepts: Arrow in/out, no Python row UDFs, no RDDs).
+``extract_batches`` is the one extraction body (pipeline.run_extract);
+``fields_batches`` re-runs only the field registry over committed text
+(runner.reprocess_fields, C4).
 
-Lineage side-band (SURVEY.md §4.3): both stage bodies stamp
+Lineage side-band (SURVEY.md §4.3): both bodies stamp
 ``_wall_ms`` = cumulative wall time of this partition's processing so the
 driver can aggregate per-partition wall time without a second pass
 (reference analogue: the request-latency middleware,
@@ -24,20 +27,10 @@ from .fields import extract_spans
 
 # Struct DDL fragments shared by pipeline schemas
 BLOCK_T = "array<struct<page:int,score:double,n_chars:int>>"
-CANDIDATE_T = (
-    "array<struct<profile:string,conf:double,score:double,text:string,"
-    f"blocks:{BLOCK_T}>>"
-)
 SPAN_T = (
     "array<struct<name:string,value:string,field_type:string,"
     "start:bigint,end:bigint,confidence:double,is_required:boolean,"
     "method:string>>"
-)
-
-PARSED_SCHEMA = (
-    "url string, warc_ts timestamp, doc_type string, bucket int, "
-    "kind string, n_pages int, bytes_in bigint, "
-    f"candidates {CANDIDATE_T}, error string, _wall_ms double"
 )
 
 EXTRACTED_FIELDS_SCHEMA = (
@@ -48,43 +41,34 @@ EXTRACTED_FIELDS_SCHEMA = (
 )
 
 
-def make_extract_batches(profiles: tuple[str, ...] | None = None,
-                         patterns_only: bool = False,
-                         cascade_accept: float | None = None):
-    """Factory for the fused body with a restricted candidate-profile
-    ensemble and/or the patterns-only fields arm (M12 cascade cheap
-    pass). ``cascade_accept`` switches the body to the IN-BATCH cascade
-    (oracle.extract_document_cascade: cheap pass, below-gate documents
-    escalate to the full ensemble inside the same batch — ``profiles``/
-    ``patterns_only`` then describe the cheap pass). The closure ships
-    to executors via cloudpickle like any mapInPandas body."""
+def make_extract_batches(accept: float | None = None,
+                         cheap_fields: bool = False):
+    """Factory binding the cascade gate (``accept``) and the cheap
+    pass's patterns-only fields arm (``cheap_fields``) into the fused
+    body. The closure ships to executors via cloudpickle like any
+    mapInPandas body."""
     def body(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        return extract_batches(it, profiles, patterns_only, cascade_accept)
+        return extract_batches(it, accept, cheap_fields)
     return body
 
 
 def extract_batches(it: Iterator[pd.DataFrame],
-                    profiles: tuple[str, ...] | None = None,
-                    patterns_only: bool = False,
-                    cascade_accept: float | None = None
-                    ) -> Iterator[pd.DataFrame]:
+                    accept: float | None = None,
+                    cheap_fields: bool = False) -> Iterator[pd.DataFrame]:
     """Fused single-pass body: the whole per-document pipeline
     (oracle.extract_document: parse → best-of → fields) in ONE Python
-    stage. Preferred for throughput: candidate texts never cross the
-    Arrow boundary (the staged path ships every candidate profile's full
-    text through two extra JVM↔Python hops — measured 2-3× slower).
+    stage, so candidate texts never cross the Arrow boundary. A float
+    ``accept`` runs the M12 cascade per document instead
+    (oracle.extract_document_cascade: cheap pass, below-gate documents
+    escalate to the full ensemble inside the same batch).
     Input batches carry url, warc_ts, bucket, html."""
     t0 = time.monotonic()
-    if cascade_accept is not None:
+    if accept is not None:
         def one(url, payload):
             return oracle.extract_document_cascade(
-                url, payload, accept=cascade_accept,
-                cheap_profiles=profiles or ("strict",),
-                cheap_fields=patterns_only)
+                url, payload, accept=accept, cheap_fields=cheap_fields)
     else:
-        def one(url, payload):
-            return oracle.extract_document(url, payload, profiles,
-                                           patterns_only)
+        one = oracle.extract_document
     for pdf in it:
         payloads = pdf["html"]
         recs = [
@@ -113,35 +97,10 @@ def extract_batches(it: Iterator[pd.DataFrame],
         yield out
 
 
-def parse_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Stage 1 body: html:binary → candidates (oracle.parse_candidates).
-    Input batches must carry url, warc_ts, doc_type, bucket, html."""
-    t0 = time.monotonic()
-    for pdf in it:
-        payloads = pdf["html"]
-        recs = [oracle.parse_candidates(bytes(b) if b is not None else b"") for b in payloads]
-        out = pd.DataFrame(
-            {
-                "url": pdf["url"].values,
-                "warc_ts": pdf["warc_ts"].values,
-                "doc_type": pdf["doc_type"].values,
-                "bucket": pdf["bucket"].values,
-                "kind": [r["kind"] for r in recs],
-                "n_pages": pd.array([r["n_pages"] for r in recs], dtype="int32"),
-                "bytes_in": pd.array(
-                    [len(b) if b is not None else 0 for b in payloads], dtype="int64"
-                ),
-                "candidates": [r["candidates"] for r in recs],
-                "error": [r["error"] for r in recs],
-            }
-        )
-        out["_wall_ms"] = (time.monotonic() - t0) * 1000.0
-        yield out
-
-
 def fields_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Stage 3 body: (text, doc_type, status) → spans + confidence
-    (shared fields module — same ``re`` engine as the oracle)."""
+    """Fields-only body: (text, doc_type, status) → spans + confidence
+    (shared fields module — same ``re`` engine as the oracle). Rows that
+    are not COMPLETED carry no spans, exactly like the oracle."""
     t0 = time.monotonic()
     for pdf in it:
         spans_col: list[list[dict]] = []
