@@ -1,7 +1,7 @@
 """Benchmark harness (driver contract + scaling evidence).
 
 Default mode: runs the headline extraction job over a deterministic
-synthesized pages corpus plus representative relational/text/ANN queries
+synthesized pages corpus plus representative extraction/text/ANN queries
 at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS], and prints ONE JSON line:
 
@@ -33,12 +33,6 @@ CACHE_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".bench_cac
 # representative headline queries from __spark_entry__ (each timed with a
 # full materialization via the noop sink)
 BENCH_QUERIES = [
-    "q1_pricing_summary",
-    "q3_top_revenue",
-    "window_top_order_per_customer",
-    "sessionize_events",
-    "salted_user_totals",
-    "cube_order_stats",
     "token_counts_by_lang",
     "simhash_doc_hashes",
     "minhash_signatures",

@@ -64,7 +64,7 @@ def main() -> int:
         if only and name not in only:
             continue
         try:
-            # release in finally: 70 queries in one session — a FAILED
+            # release in finally: every query runs in one session — a FAILED
             # query must not leave its persisted intermediates contending
             # with the next query's execution (release_all because
             # attribute tracking doesn't survive the .select() most

@@ -582,9 +582,8 @@ def test_ann_oracles_agree_on_invalid_rows(spark, tmp_path):
     con.sql(f"CREATE VIEW embeddings AS "
             f"SELECT * FROM '{sf_dir}/embeddings.parquet/*.parquet'")
     qs, oracles = entry.queries(), entry.oracle_sql()
-    for name in ["embedding_norms", "ann_lsh_buckets", "ann_lsh_topk",
-                 "ann_ivf_topk", "cosine_topk_bruteforce",
-                 "embedding_near_dup_bucketed"]:
+    for name in ["ann_lsh_buckets", "ann_lsh_topk", "ann_ivf_topk",
+                 "cosine_topk_bruteforce", "embedding_near_dup_bucketed"]:
         try:
             sdf = qs[name](spark, sf_dir).toPandas()
         finally:

@@ -1,28 +1,28 @@
 """Operator battery spot-check: a fast subset of __spark_entry__
 queries compared against their DuckDB oracles at sf0.001, using the same
 canonicalization the driver applies (sorted columns, order-insensitive
-row hash). The full 75-query sweep at sf0.01 runs via
-scripts/check_entry.py (and by the driver per-round)."""
+row hash). The full registry sweep at sf0.01 runs via
+scripts/check_entry.py."""
+
+import re
 
 import duckdb
 import pytest
 
 import __spark_entry__ as entry
+import bench
 
 SF_DIR = "/root/testdata/sf0.001"
 
 FAST_QUERIES = [
-    "q1_pricing_summary",
-    "region_customer_rollup",
-    "window_top_order_per_customer",
-    "sessionize_events",
-    "cube_order_stats",
-    "salted_user_totals",
     "token_counts_by_lang",
     "minhash_signatures",
     "simhash_doc_hashes",
     "cosine_topk_bruteforce",
-    "multimodal_binary_meta",
+    # the reference's query endpoints over the extraction output: the
+    # one-shuffle statistics cube (A4-A8, A10) and the sorted page (O1, O2)
+    "extract_stats_cube",
+    "extract_list_page",
     # round-2 driver-oracled extraction + scale paths: keep the generated
     # SQL replay in lock-step with the Python spec under plain pytest.
     # (The remaining oracled queries — warnings, PDF, simhash pairs, … —
@@ -84,3 +84,10 @@ def test_every_query_has_callable_and_aliased_oracle():
     # oracles — every registered query now has a DuckDB oracle
     rows_only = set(qs) - set(oracles)
     assert rows_only == set()
+    # no stale name in the priority queue or the bench list, and no
+    # entry in TABLES that no oracle reads
+    assert set(entry._PRIORITY) <= set(qs)
+    assert set(bench.BENCH_QUERIES) <= set(qs)
+    for t in entry.TABLES:
+        assert any(re.search(rf"\b(FROM|JOIN)\s+{t}\b", sql, re.I)
+                   for sql in oracles.values()), t

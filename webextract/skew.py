@@ -10,8 +10,7 @@ host-like keys. Two mechanisms:
    groupBy(key, salt) partial agg → groupBy(key) final merge. The first
    shuffle spreads a hot key over ``n_salts`` reducers; the second merges
    ``n_salts`` tiny partials. Results are exactly equal to a direct
-   groupBy (verified against a plain-SQL DuckDB oracle in
-   __spark_entry__.queries()['salted_user_totals']).
+   groupBy (tests/test_skew.py::test_salted_agg_equals_direct).
 
 2. ``hot_keys``: cheap sampled pre-agg to *detect* hot keys when salting
    should be selective (salt only hot keys, leave the long tail alone —
